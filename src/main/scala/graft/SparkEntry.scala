@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.mesh.Fixtures
+import graft.mesh.{EntityPlan, Fixtures}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -15,13 +15,12 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val df = Fixtures.lineitemView(spark, "/root/testdata/sf0.001")
-    df.createOrReplaceTempView("lineitem_entity")
-    graft.mesh.ViewEpoch.noteShadow()
-    spark.sql(
+    EntityPlan.sql(spark,
       """SELECT returnflag, linestatus, round(sum(quantity), 2) AS sum_qty,
         |       count(*) AS count_order
         |FROM lineitem_entity GROUP BY returnflag, linestatus
-        |ORDER BY returnflag, linestatus""".stripMargin)
+        |ORDER BY returnflag, linestatus""".stripMargin,
+      Seq("lineitem_entity" -> df))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -111,7 +111,8 @@ final case class FieldMapping(
 
 /** Physical file-backed dataset (the FileDirectory connection type,
   * `core/src/execute/data_stores/file_directory.rs:57-141`): read with the
-  * Spark reader and registered as `viewName` for the source SQL. */
+  * Spark reader and bound as `viewName` inside the source SQL only — it is
+  * never registered in the session catalog. */
 final case class FileSource(
     format: String, // parquet | csv | json
     path: String,
@@ -143,8 +144,9 @@ final case class JdbcSource(
 
 /** One queryable dataset within a physical connection
   * (`core/src/model/data_stores/mod.rs:39-45`). `sourceSql` is a SQL snippet
-  * over `viewName` (registered from `fileSource` if present, otherwise a
-  * pre-registered physical temp view), substituted as a derived table. */
+  * over `viewName` (the `fileSource` frame bound for this SQL if present,
+  * otherwise a pre-registered physical temp view), substituted as a derived
+  * table. */
 final case class DataSource(
     id: String,
     sourceSql: String,

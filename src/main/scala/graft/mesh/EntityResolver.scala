@@ -1,7 +1,5 @@
 package graft.mesh
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,8 +33,6 @@ import graft.catalog._
 object EntityResolver {
   val SourceRelayCol = "_source_relay_"
   val SourceIdCol    = "_source_id_"
-
-  private val viewCounter = new AtomicLong(0)
 
   /** Resolve `entityName` as seen from `siteName` for `user`.
     *
@@ -99,7 +95,7 @@ object EntityResolver {
     * actually keep each provenance column flowing. No data is scanned: a hop
     * whose `sqlTemplate` drops `_source_relay_` and/or `_source_id_` (no
     * `SELECT *`) is detected by analyzing the rendered template against a
-    * schema-only probe view, exactly mirroring `remoteMappedDF`'s per-column
+    * schema-only probe frame, exactly mirroring `remoteMappedDF`'s per-column
     * runtime check; each dropped column degrades to `None` independently, so
     * a template keeping only the relay yields `(Some(relay), None)` branches
     * and one dropping both collapses its subtree to `(None, None)`. Sources
@@ -168,7 +164,8 @@ object EntityResolver {
     * so when local and remote names differ, the user text is re-pointed at
     * the remote name by the same word-boundary substitution `renderSql`
     * itself uses. Inside the (non-recursive) CTE body the self-name resolves
-    * to the peer's real entity view, standard SQL scoping. */
+    * to the entity the peer binds around the statement ([[EntityPlan]]),
+    * standard SQL scoping. */
   private[graft] def mapRemoteRequestSql(
       spark: SparkSession,
       mesh: Mesh,
@@ -187,12 +184,7 @@ object EntityResolver {
     // which columns does the rendered template actually emit? (schema-only
     // probe — mirrors remoteInfoProjection's runtime availability check)
     val remoteSchema = mesh.site(rm.peer).entities(rm.remoteEntity).schema
-    val probeName = s"__graft_probe_${viewCounter.incrementAndGet()}"
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], remoteSchema)
-      .createOrReplaceTempView(probeName)
-    val available =
-      try spark.sql(rm.renderSql(probeName)).columns.toSet
-      finally spark.catalog.dropTempView(probeName)
+    val available = templateOver(spark, rm, emptyFrame(spark, remoteSchema)).columns.toSet
     val proj = entity.informations.map { info =>
       rm.infoMappings.find(_.localInfo == info.name) match {
         case Some(m) if available.contains(m.remoteInfo) =>
@@ -213,7 +205,7 @@ object EntityResolver {
   }
 
   /** Plan-only check: which provenance columns does `rm.sqlTemplate` keep?
-    * Analyzes the rendered template over an empty probe view carrying the
+    * Analyzes the rendered template over an empty probe frame carrying the
     * remote entity schema + provenance columns — Catalyst analysis only,
     * no job runs. Returns (keeps `_source_relay_`, keeps `_source_id_`). */
   private def templateProvenance(
@@ -221,14 +213,15 @@ object EntityResolver {
     val remoteSchema = mesh.site(rm.peer).entities(rm.remoteEntity).schema
     val probeSchema = StructType(remoteSchema.fields ++ Seq(
       StructField(SourceRelayCol, StringType), StructField(SourceIdCol, StringType)))
-    val probeName = s"__graft_probe_${viewCounter.incrementAndGet()}"
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], probeSchema)
-      .createOrReplaceTempView(probeName)
-    try {
-      val cols = spark.sql(rm.renderSql(probeName)).columns.toSet
-      (cols.contains(SourceRelayCol), cols.contains(SourceIdCol))
-    } finally spark.catalog.dropTempView(probeName)
+    val cols = templateOver(spark, rm, emptyFrame(spark, probeSchema)).columns.toSet
+    (cols.contains(SourceRelayCol), cols.contains(SourceIdCol))
   }
+
+  /** `rm`'s SQL template applied to `remote`, bound under the remote
+    * entity's name. */
+  private def templateOver(
+      spark: SparkSession, rm: RemoteEntityMapping, remote: DataFrame): DataFrame =
+    EntityPlan.sql(spark, rm.renderSql(rm.remoteEntity), Seq(rm.remoteEntity -> remote))
 
   /** A RemoteEntityMapping whose peer is absent from the mesh (an offline
     * relay whose catalog registration was skipped) contributes nothing: the
@@ -354,13 +347,14 @@ object EntityResolver {
       // `core/src/execute/mod.rs:150-191`); a direct request has none
       viaRelay.flatMap(ds.relayPermissions.get))
 
-    // file-backed sources (FileDirectory runner, S1): read + register the
-    // physical relation the source SQL refers to. JSON nested objects/
-    // arrays surface as their serialized TEXT: the reference's DataField
-    // `$.`-path contract addresses a JSON document stored in a column
-    // (`core/src/model/data_stores/mod.rs:55-62`), so `get_json_object`
-    // must see a string — and the DSv2 connector's raw view agrees.
-    ds.fileSource.foreach { fs =>
+    // file-backed sources (FileDirectory runner, S1): read the physical
+    // relation the source SQL refers to (bound as `viewName` below). JSON
+    // nested objects/arrays surface as their serialized TEXT: the
+    // reference's DataField `$.`-path contract addresses a JSON document
+    // stored in a column (`core/src/model/data_stores/mod.rs:55-62`), so
+    // `get_json_object` must see a string — and the DSv2 connector's raw
+    // view agrees.
+    val fileFrame = ds.fileSource.map { fs =>
       val effective =
         if (fs.format == "csv") FileSource.csvEffectiveOptions(fs.options)
         else fs.options
@@ -376,25 +370,7 @@ object EntityResolver {
             case _ => col(f.name)
           }
         }.toSeq: _*)
-      flattened.createOrReplaceTempView(ds.viewName.getOrElse(ds.id))
-      // no fixture source id collides with a shared view name today, but a
-      // catalog whose viewName/id matches one must bump the epoch or the
-      // epoch-guarded helpers would leave the shadow unrepaired
-      ViewEpoch.noteShadow()
-    }
-
-    // view-backed sources whose SQL references a relation named like the
-    // entity would silently read a previously-registered entity view after
-    // a MeshSession query (ACL/transforms applied twice, possibly under
-    // another user) — refuse loudly and point at the raw_-prefix convention
-    if (ds.fileSource.isEmpty && ds.jdbcSource.isEmpty) {
-      val rels = graft.validation.SqlValidator.relationNamesOf(ds.sourceSql, spark)
-      if (rels.contains(entity.name))
-        throw new IllegalStateException(
-          s"source ${ds.id} reads relation '${entity.name}', which collides with " +
-            s"the entity name and would be shadowed by a registered entity view; " +
-            "register the physical relation under a distinct name (e.g. " +
-            s"'raw_${entity.name}') and reference that in source_sql")
+      flattened
     }
 
     // delegated-engine seam (S3/S4): `sourceSql` executes ON the external
@@ -414,7 +390,10 @@ object EntityResolver {
           .load()
           .where(expr(perm.allowedRows))
       case None =>
-        spark.sql(ds.sourceSql).where(expr(perm.allowedRows))
+        fileFrame.map(f => EntityPlan.sql(spark, ds.sourceSql,
+            Seq(ds.viewName.getOrElse(ds.id) -> f)))
+          .getOrElse(spark.sql(ds.sourceSql))
+          .where(expr(perm.allowedRows))
     }
 
     val projected = entity.informations.map { info =>
@@ -445,17 +424,8 @@ object EntityResolver {
       entity: Entity,
       rm: RemoteEntityMapping,
       remoteDF: DataFrame,
-      withProvenance: Boolean): DataFrame = {
-    val viewName = (s"__graft_remote_${rm.peer}_${rm.remoteEntity}_" +
-      viewCounter.incrementAndGet()).replaceAll("[^A-Za-z0-9_]", "_")
-    remoteDF.createOrReplaceTempView(viewName)
-    ViewEpoch.noteShadow() // counter-suffixed, but shadow-proof is cheap
-    // spark.sql analyzes eagerly, so the captured plan no longer needs the
-    // view — drop it to keep a long-running session's catalog bounded
-    val templated = spark.sql(rm.renderSql(viewName))
-    spark.catalog.dropTempView(viewName)
-    remoteInfoProjection(entity, rm, templated, withProvenance)
-  }
+      withProvenance: Boolean): DataFrame =
+    remoteInfoProjection(entity, rm, templateOver(spark, rm, remoteDF), withProvenance)
 
   /** RemoteInfoMapping renames/transforms + provenance passthrough over an
     * already-templated remote relation — shared by the in-process path
@@ -485,14 +455,15 @@ object EntityResolver {
     templated.select(projected ++ prov: _*)
   }
 
-  private def emptyDF(spark: SparkSession, entity: Entity, withProvenance: Boolean): DataFrame = {
-    val schema =
+  private def emptyDF(spark: SparkSession, entity: Entity, withProvenance: Boolean): DataFrame =
+    emptyFrame(spark,
       if (withProvenance)
         StructType(entity.schema.fields ++ Seq(
           StructField(SourceRelayCol, StringType), StructField(SourceIdCol, StringType)))
-      else entity.schema
+      else entity.schema)
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-  }
 
   /** Render a DataField path as a SQL expression: plain column names pass
     * through; nested JSON paths (`$.props.k`, `$.arr.[1].f` — the

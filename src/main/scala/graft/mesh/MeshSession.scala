@@ -1,6 +1,7 @@
 package graft.mesh
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -11,10 +12,11 @@ import graft.validation.SqlValidator
   * reference -> execute on Catalyst.
   *
   * Where the reference rewrites SQL text per source and ships it to backend
-  * engines (`core/src/execute/map_local.rs:24-36`), this registers the
-  * resolved entity DataFrame as a temp view under the entity's name, so the
-  * user's SQL runs unchanged and Catalyst performs pushdown into every
-  * per-source branch.
+  * engines (`core/src/execute/map_local.rs:24-36`), this binds the resolved
+  * entity DataFrame to the entity's name inside the parsed statement
+  * ([[EntityPlan.bind]]), so the user's SQL runs unchanged, Catalyst
+  * performs pushdown into every per-source branch, and no query writes the
+  * shared session catalog.
   */
 class MeshSession private (
     val spark: SparkSession,
@@ -35,21 +37,20 @@ class MeshSession private (
   /** The catalog as of NOW (re-read per query for registry-backed sessions). */
   def mesh: graft.catalog.Mesh = meshProvider()
 
-  /** Per-session analysis-plan cache (round-16): a repeated query text
-    * skips validate -> resolve -> register -> analyze when NOTHING it
-    * depends on has moved. Validity is (a) the Mesh VALUE's reference
-    * identity — the registry swaps in a new immutable Mesh on every
-    * admin upsert, so any catalog mutation invalidates every cached
-    * plan on the next query (MeshSessionSpec pins it) — and (b) the
-    * ViewEpoch, so any shared-temp-view shadow (another session's
-    * entity registration, a fixture re-assert) also re-analyzes.
-    * Cached = a PLAN; every action re-optimizes and re-executes from
-    * the sources. Bounded: a serving session's distinct-text cache is
-    * capped, dropping wholesale at the cap (plans are cheap to rebuild;
-    * an LRU would be ceremony). */
+  /** Per-session analysis-plan cache: a repeated query text skips
+    * validate -> resolve -> bind -> analyze when the catalog has not
+    * moved. Validity is the Mesh VALUE's reference identity — the
+    * registry swaps in a new immutable Mesh on every admin upsert, so any
+    * catalog mutation invalidates every cached plan on the next query
+    * (PlanCacheSpec pins it). Nothing else can go stale: the entity is
+    * bound into the plan itself, never looked up by name in the session
+    * catalog. Cached = a PLAN; every action re-optimizes and re-executes
+    * from the sources. Bounded: a serving session's distinct-text cache
+    * is capped, dropping wholesale at the cap (plans are cheap to
+    * rebuild; an LRU would be ceremony). */
   private val planCache = scala.collection.concurrent.TrieMap
     .empty[(String, Option[String], Boolean, Option[StructType]),
-      (graft.catalog.Mesh, Long, DataFrame)]
+      (graft.catalog.Mesh, DataFrame)]
   private val PlanCacheMax = 128
 
   /** Validate + execute `sqlText` as `user` against this site's catalog.
@@ -64,27 +65,27 @@ class MeshSession private (
     val key = (sqlText, user, withProvenance, returnSchema)
     val meshNow = mesh
     planCache.get(key) match {
-      case Some((m, e, df)) if (m eq meshNow) && e == ViewEpoch.current => df
+      case Some((m, df)) if m eq meshNow => df
       case _ =>
-        val entity = SqlValidator.validate(sqlText, spark)
-        if (!meshNow.site(siteName).entities.contains(entity))
-          throw SqlValidator.InvalidQuery(s"Entity $entity not found on relay $siteName")
+        val (entity, parsed) = validated(sqlText, meshNow)
         val entityDF =
           EntityResolver.resolve(spark, meshNow, siteName, entity, user, withProvenance)
-        // register + analyze atomically w.r.t. concurrent async submits that
-        // use the same shared-name view
-        val out = QueryService.planLock.synchronized {
-          entityDF.createOrReplaceTempView(entity)
-          ViewEpoch.noteShadow()
-          spark.sql(SqlValidator.preprocess(sqlText))
-        }
+        val out = EntityPlan.bind(spark, parsed, Seq(entity -> entityDF))
         val cast = returnSchema.map(EntityResolver.castToSchema(out, _)).getOrElse(out)
         if (planCache.size >= PlanCacheMax) planCache.clear()
-        // the epoch AFTER our own registration bump — unchanged epoch
-        // means unchanged catalog for the next identical query
-        planCache.put(key, (meshNow, ViewEpoch.current, cast))
+        planCache.put(key, (meshNow, cast))
         cast
     }
+  }
+
+  /** The single entity `sqlText` reads (which must exist on this site in
+    * `meshNow`) and the statement's parsed plan. */
+  private[mesh] def validated(sqlText: String,
+      meshNow: graft.catalog.Mesh): (String, LogicalPlan) = {
+    val (entity, parsed) = SqlValidator.validateParsed(sqlText, spark)
+    if (!meshNow.site(siteName).entities.contains(entity))
+      throw SqlValidator.InvalidQuery(s"Entity $entity not found on relay $siteName")
+    (entity, parsed)
   }
 
   /** The relay-to-relay entry point behind [[graft.transport.RelayServer]]'s
@@ -97,16 +98,11 @@ class MeshSession private (
   private[graft] def sqlForPeer(sqlText: String, user: Option[String],
       viaRelay: Option[String], alsoVisited: Set[String],
       withProvenance: Boolean): DataFrame = {
-    val entity = SqlValidator.validate(sqlText, spark)
-    if (!mesh.site(siteName).entities.contains(entity))
-      throw SqlValidator.InvalidQuery(s"Entity $entity not found on relay $siteName")
-    val entityDF = EntityResolver.resolve(spark, mesh, siteName, entity, user,
+    val meshNow = mesh
+    val (entity, parsed) = validated(sqlText, meshNow)
+    val entityDF = EntityResolver.resolve(spark, meshNow, siteName, entity, user,
       withProvenance, viaRelay, alsoVisited)
-    QueryService.planLock.synchronized {
-      entityDF.createOrReplaceTempView(entity)
-      ViewEpoch.noteShadow()
-      spark.sql(SqlValidator.preprocess(sqlText))
-    }
+    EntityPlan.bind(spark, parsed, Seq(entity -> entityDF))
   }
 
   /** [[sql]] with an x509-derived [[graft.catalog.Principal]]: the
@@ -337,11 +333,8 @@ class QueryService(session: MeshSession, resultDir: String,
       // session's mesh may change under concurrent admin applies, and the
       // fan-out decisions must agree with the mapped SQL they produce
       val mesh = session.mesh
-      val entity = SqlValidator.validate(sqlText, spark)
+      val (entity, parsed) = session.validated(sqlText, mesh)
       val site = mesh.site(session.siteName)
-      if (!site.entities.contains(entity))
-        throw SqlValidator.InvalidQuery(
-          s"Entity $entity not found on relay ${session.siteName}")
       val visitedAll = visited + session.siteName
       // where completed branch results should land: the origin that asked
       // us (propagated unchanged — results skip intermediate hops,
@@ -380,8 +373,8 @@ class QueryService(session: MeshSession, resultDir: String,
         }
       }
       // local branches: the distributed peers are excluded from this plan
-      val branches = perBranchFrames(sqlText, user, returnSchema, viaRelay,
-        visited ++ wirePeers.map(_._1.peer))
+      val branches = perBranchFrames(mesh, entity, parsed, user, returnSchema,
+        viaRelay, visited ++ wirePeers.map(_._1.peer))
       branchTasks.compute(id, (_, m) => Option(m).getOrElse(Map.empty) ++
         branches.map { case (b, _) => b -> TaskState(Queued, None) })
       branches.zipWithIndex.foreach { case ((branch, df), i) =>
@@ -499,20 +492,18 @@ class QueryService(session: MeshSession, resultDir: String,
     * A LIMIT/aggregate therefore applies per source, exactly like the
     * reference's 53-rows-from-limit-10 query1 oracle. Catalyst constant-
     * folds the provenance filter, pruning all other branches from each
-    * per-branch plan. */
+    * per-branch plan. `parsed` is the validated statement reading `entity`;
+    * each branch binds its own slice of the entity into it. */
   private def perBranchFrames(
-      sqlText: String, user: Option[String],
-      returnSchema: Option[StructType] = None,
-      viaRelay: Option[String] = None,
-      alsoVisited: Set[String] = Set.empty): Seq[((String, String), DataFrame)] = {
+      mesh: graft.catalog.Mesh, entity: String,
+      parsed: LogicalPlan,
+      user: Option[String], returnSchema: Option[StructType],
+      viaRelay: Option[String],
+      alsoVisited: Set[String]): Seq[((String, String), DataFrame)] = {
     import EntityResolver.{SourceIdCol, SourceRelayCol}
     val spark = session.spark
-    val entity = SqlValidator.validate(sqlText, spark)
-    if (!session.mesh.site(session.siteName).entities.contains(entity))
-      throw SqlValidator.InvalidQuery(
-        s"Entity $entity not found on relay ${session.siteName}")
     val full = EntityResolver.resolve(
-      spark, session.mesh, session.siteName, entity, user,
+      spark, mesh, session.siteName, entity, user,
       withProvenance = true, viaRelay, alsoVisited)
     // enumerate branches from the CATALOG (get_flight_info semantics,
     // `flight_server/src/flight.rs:194-309`) — no data scan runs before the
@@ -523,28 +514,22 @@ class QueryService(session: MeshSession, resultDir: String,
     // filters below still keep every row. Sources deny-all'd for this user
     // are omitted.
     val branches = EntityResolver
-      .provenanceBranches(spark, session.mesh, session.siteName, entity, user,
+      .provenanceBranches(spark, mesh, session.siteName, entity, user,
         viaRelay, alsoVisited)
       .sortBy { case (a, b) => (a.getOrElse(""), b.getOrElse("")) }
-    // plan construction registers a shared-name temp view; serialize it
-    // across concurrently-submitted queries (execution stays concurrent)
-    QueryService.planLock.synchronized {
-      branches.toSeq.map { case (relay, srcId) =>
-        full
-          .where(col(SourceRelayCol) <=> relay.map(lit(_)).getOrElse(lit(null)) &&
-            col(SourceIdCol) <=> srcId.map(lit(_)).getOrElse(lit(null)))
-          .drop(SourceRelayCol, SourceIdCol)
-          .createOrReplaceTempView(entity)
-        ViewEpoch.noteShadow()
-        val relayName = relay.getOrElse("(unattributed)")
-        val srcName = srcId.getOrElse("(unattributed)")
-        val base = spark.sql(SqlValidator.preprocess(sqlText))
-        val cast = returnSchema
-          .map(EntityResolver.castToSchema(base, _)).getOrElse(base)
-        (relayName, srcName) -> cast
-          .withColumn(SourceRelayCol, lit(relayName))
-          .withColumn(SourceIdCol, lit(srcName))
-      }
+    branches.map { case (relay, srcId) =>
+      val slice = full
+        .where(col(SourceRelayCol) <=> relay.map(lit(_)).getOrElse(lit(null)) &&
+          col(SourceIdCol) <=> srcId.map(lit(_)).getOrElse(lit(null)))
+        .drop(SourceRelayCol, SourceIdCol)
+      val relayName = relay.getOrElse("(unattributed)")
+      val srcName = srcId.getOrElse("(unattributed)")
+      val base = EntityPlan.bind(spark, parsed, Seq(entity -> slice))
+      val cast = returnSchema
+        .map(EntityResolver.castToSchema(base, _)).getOrElse(base)
+      (relayName, srcName) -> cast
+        .withColumn(SourceRelayCol, lit(relayName))
+        .withColumn(SourceIdCol, lit(srcName))
     }
   }
 
@@ -646,10 +631,6 @@ class QueryService(session: MeshSession, resultDir: String,
 }
 
 object QueryService {
-  /** Serializes shared-name temp-view registration during plan building
-    * across concurrent submits (and MeshSession.sql callers). */
-  private[mesh] val planLock = new Object
-
   /** PROCESS-WIDE bounded worker pool shared by every QueryService: a
     * submit flood queues instead of exhausting driver threads (the
     * reference's query_runner drains a work queue the same way), and

@@ -1,23 +1,9 @@
 package graft.mesh
 
-/** Session-global shadow counter for shared temp-view names.
-  *
-  * Harness helpers (Fixtures.registerRaw, Views.registerAll) re-assert
-  * their temp views before every query because a MeshSession legitimately
-  * registers entity views under bare table names (the reference requires
-  * user SQL to address the entity name), shadowing them. Re-asserting ~20
-  * views costs ~50 ms of driver time per query — pure overhead for the
-  * overwhelmingly common no-shadow case. Every registration that can
-  * shadow a shared name bumps this epoch; the helpers skip their
-  * re-asserts while the epoch is unchanged. A racing bump during an
-  * assert leaves a stale recorded epoch, which only causes one extra
-  * (safe) re-assert on the next call. */
+/** Retired shadow counter for shared temp-view names. Mesh queries now bind
+  * their entities per query ([[EntityPlan]]) and nothing in graft reads
+  * this object; `noteShadow()` is a no-op kept only for callers outside
+  * the library that still call it after registering a view. */
 object ViewEpoch {
-  private val epoch = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Current epoch — record it together with what was asserted. */
-  def current: Long = epoch.get()
-
-  /** Note a registration that may shadow shared views. */
-  def noteShadow(): Unit = epoch.incrementAndGet()
+  def noteShadow(): Unit = ()
 }

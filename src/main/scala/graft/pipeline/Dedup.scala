@@ -692,50 +692,44 @@ object Dedup {
         // shingleSetsDeltaFor append forgotten) would silently DROP every
         // pair of the missing candidates at the verify inner join, the
         // exact silent-wrongness class every other stored-state gate
-        // here turns loud. Driver-tier ingests compare DISTINCT ids over
-        // the checkpointed set frame (set ids are a subset of the
-        // candidate ids by construction, batch and corpus ids disjoint —
-        // distinct-count equality == full coverage), in the same ONE job
-        // as a raw-count check that turns DUPLICATE sidecar rows loud: a
-        // duplicated __id (a generation delta retried twice) would
-        // silently MULTIPLY its pairs at the verify join, and under the
-        // retired raw-count compare a duplicate could exactly offset a
-        // missing doc and pass. Past the bound, one candidate-sized
-        // anti-join.
-        driverIds match {
-          case Some(ids) =>
-            val cov = sets
-              .agg(count(lit(1)).as("n"), countDistinct(col("__id")).as("nd"))
-              .head()
-            if (cov.getLong(1) != ids.size) {
+        // here turns loud. Both tiers compare DISTINCT ids over the
+        // checkpointed set frame against the distinct candidate-id count
+        // (set ids are a subset of the candidate ids by construction,
+        // batch and corpus ids disjoint — distinct-count equality == full
+        // coverage), in the same ONE job as a raw-count check that turns
+        // DUPLICATE sidecar rows loud: a duplicated __id (a generation
+        // delta retried twice) would silently MULTIPLY its pairs at the
+        // verify join, and under the retired raw-count compare a
+        // duplicate could exactly offset a missing doc and pass. Only a
+        // failing gate pays to name an uncovered id.
+        val nCandIds = driverIds.map(_.size.toLong).getOrElse(candIdFrame.get._2)
+        val cov = sets
+          .agg(count(lit(1)).as("n"), countDistinct(col("__id")).as("nd"))
+          .head()
+        if (cov.getLong(1) != nCandIds) {
+          val miss = driverIds match {
+            case Some(ids) =>
               val covered = sets.select(col("__id")).collect().map(_.get(0)).toSet
-              val miss = ids.filterNot(covered)
-              throw new IllegalStateException(
-                "shingle-set sidecar does not cover every candidate document " +
-                  "(e.g. " + miss.headOption.getOrElse("?") + ") — the band " +
-                  "index and the sidecar are out of sync (a delta append " +
-                  "folded the index but not the sidecar?); re-append the " +
-                  "missing generation or drop storedShingles to verify from text")
-            }
-            if (cov.getLong(0) != cov.getLong(1))
-              throw new IllegalStateException(
-                "shingle-set sidecar holds DUPLICATE rows for candidate " +
-                  "document(s) (" + cov.getLong(0) + " rows over " +
-                  cov.getLong(1) + " distinct ids) — a generation delta " +
-                  "appended twice? Verification would silently multiply the " +
-                  "duplicated docs' pairs; compact the sidecar to one row " +
-                  "per doc")
-          case None =>
-            val missing = candIdFrame.get._1
-              .join(sets, col("__cid") === col("__id"), "left_anti")
-            if (!missing.isEmpty)
-              throw new IllegalStateException(
-                "shingle-set sidecar does not cover every candidate document " +
-                  "(e.g. " + missing.head.get(0) + ") — the band index and the " +
-                  "sidecar are out of sync (a delta append folded the index but " +
-                  "not the sidecar?); re-append the missing generation or drop " +
-                  "storedShingles to verify from text")
+              ids.find(!covered(_)).getOrElse("?")
+            case None =>
+              candIdFrame.get._1
+                .join(sets, col("__cid") === col("__id"), "left_anti").head.get(0)
+          }
+          throw new IllegalStateException(
+            "shingle-set sidecar does not cover every candidate document " +
+              "(e.g. " + miss + ") — the band index and the sidecar are out " +
+              "of sync (a delta append folded the index but not the " +
+              "sidecar?); re-append the missing generation or drop " +
+              "storedShingles to verify from text")
         }
+        if (cov.getLong(0) != cov.getLong(1))
+          throw new IllegalStateException(
+            "shingle-set sidecar holds DUPLICATE rows for candidate " +
+              "document(s) (" + cov.getLong(0) + " rows over " +
+              cov.getLong(1) + " distinct ids) — a generation delta " +
+              "appended twice? Verification would silently multiply the " +
+              "duplicated docs' pairs; compact the sidecar to one row " +
+              "per doc")
         sets
       case None =>
         val allDocs = corpus.select(col(idCol), col(textCol))

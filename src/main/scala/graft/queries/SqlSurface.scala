@@ -598,18 +598,18 @@ object SqlSurface {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map { q =>
       q.name -> ((s: SparkSession, dir: String) => {
-        // analysis-plan cache (round-16): the validator bridge + parse +
-        // analysis of these fixed texts over the MEMOIZED entity views
-        // produced a byte-identical plan every invocation (measured
-        // 10-150 ms/query of driver time, ~45 ms more after a mesh
-        // query's view shadow forced the catalog re-asserts). Scope =
-        // the resolved-view triple instance, so any re-resolution
-        // invalidates; every action on the cached plan still optimizes,
-        // plans and executes from parquet (PlanCacheSpec).
-        PlanCache.of(s, s"sqlsurface:$dir:${q.name}", Views.scope(s, dir)) {
-          Views.registerAll(s, dir)
-          s.sql(if (q.bridge) graft.validation.SqlValidator.preprocess(q.sparkSql)
-          else q.sparkSql)
+        // analysis-plan cache: the validator bridge + parse + analysis
+        // of these fixed texts over the MEMOIZED entity views produced a
+        // byte-identical plan every invocation (measured 10-150 ms/query
+        // of driver time). Scope = the resolved-view triple instance, so
+        // any re-resolution invalidates; every action on the cached plan
+        // still optimizes, plans and executes from parquet (PlanCacheSpec).
+        val entities = Views.resolved(s, dir)
+        PlanCache.of(s, s"sqlsurface:$dir:${q.name}", entities) {
+          graft.mesh.EntityPlan.sql(s,
+            if (q.bridge) graft.validation.SqlValidator.preprocess(q.sparkSql)
+            else q.sparkSql,
+            Views.EntityNames.zip(entities))
         }
       })
     }.toMap

@@ -1019,7 +1019,13 @@ object SqlValidator {
   /** Validate `sql`; returns the single referenced entity name.
     * Mirrors `validate_sql` (`validation.rs:24-59`). Callers executing the
     * SQL should run `preprocess(sql)` and execute the result. */
-  def validate(sql: String, spark: SparkSession): String = {
+  def validate(sql: String, spark: SparkSession): String =
+    validateParsed(sql, spark)._1
+
+  /** [[validate]] that also returns the parsed `preprocess(sql)` plan it
+    * checked — the statement the mesh entry points bind the resolved
+    * entity into, so a request parses once. */
+  def validateParsed(sql: String, spark: SparkSession): (String, LogicalPlan) = {
     if (sql.length > MaxQueryLength)
       throw InvalidQuery(
         s"SQL string exceeds maximum length of $MaxQueryLength characters! " +
@@ -1047,7 +1053,7 @@ object SqlValidator {
     val entities = relationNames(plan)
     if (entities.size != 1)
       throw InvalidQuery("There must be exactly one entity per query.")
-    entities.head
+    (entities.head, plan)
   }
 
   /** Quote-aware top-level split on ';' (the reference parses the full text
@@ -1100,12 +1106,6 @@ object SqlValidator {
       .map(w => if (keywords.contains(w.toLowerCase)) w.toUpperCase else w)
       .mkString(" ")
   }
-
-  /** Distinct relation names referenced by a SQL text (parse-only; empty on
-    * parse failure — callers use this for advisory checks). */
-  def relationNamesOf(sql: String, spark: SparkSession): Seq[String] =
-    try relationNames(spark.sessionState.sqlParser.parsePlan(sql))
-    catch { case _: Throwable => Nil }
 
   /** All distinct relation names referenced anywhere in the plan, including
     * CTE alias references — matching sqlparser-rs `visit_relations`, which

@@ -1044,6 +1044,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(eOffset.getMessage.contains("does not cover"))
   }
 
+  test("both candidate-id tiers refuse the same malformed shingle sidecar") {
+    Fixtures.registerRaw(spark, sfDir)
+    val docs = spark.table("documents")
+    val batch = docs.where(col("doc_id") % 10 === 3)
+    val corpus = docs.where(col("doc_id") % 10 =!= 3)
+    val index = graft.pipeline.Dedup.bandIndex(corpus, "doc_id", "text")
+    val store = graft.pipeline.Dedup.shingleSets(corpus, "doc_id", "text")
+    val corpusCand = graft.pipeline.Dedup
+      .incrementalNearDupPairs(batch, corpus, index, "doc_id", "text")
+      .collect().iterator.flatMap(r => Seq(r.getLong(0), r.getLong(1)))
+      .find(_ % 10 != 3).get
+    val duplicated = store.union(store.where(col("__id") === corpusCand))
+    val holed = store.where(col("__id") =!= corpusCand)
+    // the default bound takes the driver In-list tier; 0 forces the
+    // distributed (checkpointed id frame + semi join) tier
+    for (inListMaxIds <- Seq(100000L, 0L)) {
+      def refusal(sidecar: org.apache.spark.sql.DataFrame) =
+        intercept[IllegalStateException] {
+          graft.pipeline.Dedup.incrementalNearDupPairs(batch, corpus, index,
+            "doc_id", "text", storedShingles = Some(sidecar),
+            inListMaxIds = inListMaxIds).collect()
+        }.getMessage
+      assert(refusal(duplicated).contains("DUPLICATE"), s"inListMaxIds=$inListMaxIds")
+      assert(refusal(holed).contains("does not cover"), s"inListMaxIds=$inListMaxIds")
+    }
+  }
+
   test("rolling-merge broadcasts are size-gated: past the bound the joins run unhinted, results identical") {
     Fixtures.registerRaw(spark, sfDir)
     val docs = spark.table("documents")

@@ -361,19 +361,19 @@ class TransportSpec extends AnyFunSuite {
     assert(wrapped.startsWith("WITH documents AS (SELECT "))
     assert(wrapped.contains("CAST((n_chars) * 2 AS BIGINT) AS n_chars"))
     assert(wrapped.endsWith("SELECT doc_id, n_chars FROM documents"))
-    // the wrapped SQL still validates as ONE entity and ANALYZES against a
-    // registered view (the peer-side execution path)
+    // the wrapped SQL still validates as ONE entity and ANALYZES with the
+    // entity bound around it (the peer-side execution path)
     assert(graft.validation.SqlValidator.validate(wrapped, spark) == "documents")
-    spark.table("raw_documents").createOrReplaceTempView("documents")
-    graft.mesh.ViewEpoch.noteShadow()
-    val out = spark.sql(wrapped)
+    def onPeer(sql: String) = graft.mesh.EntityPlan.sql(spark, sql,
+      Seq("documents" -> spark.table("raw_documents")))
+    val out = onPeer(wrapped)
     assert(out.columns.toSeq == Seq("doc_id", "n_chars"))
     assert(out.where(col("n_chars") % 2 =!= 0).count() == 0) // all doubled
     // a user CTE merges into the hop's WITH list instead of nesting WITHs
     val merged = mapSql(doubled,
       "WITH t AS (SELECT doc_id FROM documents) SELECT doc_id FROM t")
     assert(merged.matches("(?s)WITH documents AS \\(.*\\), t AS .*"))
-    assert(spark.sql(merged).count() == spark.table("raw_documents").count())
+    assert(onPeer(merged).count() == spark.table("raw_documents").count())
     // differing names: user text re-points at the remote entity name
     val renamed = RemoteEntityMapping(peer = "docs_remote",
       remoteEntity = "docs_remote",
